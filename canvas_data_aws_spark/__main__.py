@@ -238,7 +238,13 @@ def main(argv: list[str] | None = None) -> int:
     ps.add_argument("--secret-file", help="JSON file with api_key/api_secret")
     ps.add_argument("--dry-run", action="store_true")
     ps.add_argument("--additive", action="store_true", help="never delete local files")
-    ps.add_argument("--max-fetch-tasks", type=int, default=16)
+    ps.add_argument(
+        "--max-fetch-tasks",
+        type=int,
+        default=16,
+        help="cap on fan-out tasks: files spread over min(this, Spark default "
+        "parallelism) tasks, whose thread pools keep this x 8 fetches in flight",
+    )
     ps.add_argument(
         "--max-files-per-run",
         type=int,

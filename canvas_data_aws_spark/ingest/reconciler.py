@@ -16,7 +16,10 @@ Scale: manifests are metadata (one row per *file*, not per record), so even
 a 100 TB lake is a few million manifest rows — the reconciliation join is
 trivially broadcastable on either side; fetch execution parallelism comes
 from partitioning the fetch list across executors (the Spark-native analog
-of one-Lambda-per-file, :78-84).
+of one-Lambda-per-file, :78-84). Python runs once per task slot: the
+manifest and listing are Arrow-built ``LocalTableScan``s, and the fan-out is
+one ``mapInArrow`` pass per task that fetches and rolls up its outcomes,
+with ``max_fetch_tasks x io_threads`` fetches in flight.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 MANIFEST_SCHEMA = StructType(
@@ -36,18 +39,27 @@ MANIFEST_SCHEMA = StructType(
     ]
 )
 
+LISTING_SCHEMA = StructType([StructField("key", StringType(), False)])
+
 #: Layout rule: every file lives under its table's directory
 #: (key construction, sync-canvas-data-files.py:60).
 RAW_PREFIX = "raw_files/"
 
 
+def _local_frame(spark: SparkSession, schema: StructType, rows: list[dict]) -> DataFrame:
+    """String-column dict rows as a ``LocalTableScan``, via a pyarrow.Table:
+    a list of Rows would plan a Python stage (``applySchemaToPythonRDD``).
+    A null in a non-nullable column raises."""
+    import pyarrow as pa
+
+    cols = {f.name: pa.array([r.get(f.name) for r in rows], pa.string()) for f in schema}
+    return spark.createDataFrame(pa.table(cols), schema)
+
+
 def manifest_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """Remote manifest as a DataFrame (source_remote_manifest: the API's
     {'files': [{table, filename, url}]} listing, sync-canvas-data-files.py:46-48)."""
-    return spark.createDataFrame(
-        [Row(table=r["table"], filename=r["filename"], url=r.get("url")) for r in rows],
-        MANIFEST_SCHEMA,
-    )
+    return _local_frame(spark, MANIFEST_SCHEMA, rows)
 
 
 def with_key(manifest: DataFrame, prefix: str = RAW_PREFIX) -> DataFrame:
@@ -61,7 +73,7 @@ def local_listing(spark: SparkSession, root: str, prefix: str = RAW_PREFIX) -> D
     """source_local_listing: existing object keys under the prefix
     (the S3 listing at sync-canvas-data-files.py:38-43). Local-FS flavor:
     walk ``root`` and emit relative keys. Listing is metadata-scale, so a
-    driver-side walk then parallelize is the honest equivalent of the
+    driver-side walk into a local table is the honest equivalent of the
     reference's paginated list_objects."""
     import os
 
@@ -70,8 +82,8 @@ def local_listing(spark: SparkSession, root: str, prefix: str = RAW_PREFIX) -> D
     for dirpath, _dirs, files in os.walk(base):
         for fn in sorted(files):
             rel = os.path.relpath(os.path.join(dirpath, fn), root)
-            keys.append(Row(key=rel.replace(os.sep, "/")))
-    return spark.createDataFrame(keys, StructType([StructField("key", StringType(), False)]))
+            keys.append({"key": rel.replace(os.sep, "/")})
+    return _local_frame(spark, LISTING_SCHEMA, keys)
 
 
 def reconcile(
@@ -143,8 +155,8 @@ class SyncEngine:
     prefix: str = RAW_PREFIX
     dry_run: bool = False
     fetch_chunk_bytes: int = 8 * 1024 * 1024  # worker chunk size parity (:20)
-    max_fetch_tasks: int = 16  # Spark tasks the work list spreads over
-    io_threads: int = 8  # concurrent fetches within one task (I/O-bound)
+    max_fetch_tasks: int = 16  # cap: fan-out runs min(this, defaultParallelism) tasks
+    io_threads: int = 8  # fetches in flight per task at the cap (see _fan_out)
     on_summary: Callable[["SyncSummary"], None] | None = None  # sink_notify
     log_sample_cap: int = 10_000  # max per-file lines the driver retains
     #: continuation_reinvoke analog (sync-canvas-data-files.py:88-98): the
@@ -176,6 +188,15 @@ class SyncEngine:
         remote = manifest_from_rows(spark, remote_rows)
         local = local_listing(spark, self.root, self.prefix)
         return reconcile(remote, local, self.prefix, additive=additive)
+
+    def _fan_out(self, spark: SparkSession) -> tuple[int, int]:
+        """(tasks, threads per task) of the fetch fan-out: one task per slot
+        up to the cap, each pool scaled up by the tasks the cap allowed but
+        the slots did not, so max_fetch_tasks x io_threads fetches stay in
+        flight at any cluster size."""
+        cap = max(1, self.max_fetch_tasks)
+        n_tasks = min(cap, spark.sparkContext.defaultParallelism)
+        return n_tasks, max(1, self.io_threads) * -(-cap // n_tasks)
 
     def apply(
         self,
@@ -226,6 +247,7 @@ class SyncEngine:
                 work = work.orderBy("key")
             work = work.limit(int(self.max_files_per_run))
 
+        totals: dict[str, int] = {}  # action -> files, from the fan-out rollup
         if self.dry_run:
             work_rows = work.collect()
             statuses = [
@@ -239,42 +261,27 @@ class SyncEngine:
                     f"DRY RUN: ... ({len(statuses) - self.log_sample_cap} more files)"
                 )
         else:
-            # Fetch/delete fan-out ON THE EXECUTORS (the Spark-native analog
-            # of the reference's one-Lambda-per-file dispatch,
-            # sync-canvas-data-files.py:78-84): the work list is repartitioned
-            # across tasks and each task runs the idempotence-guarded fetch
-            # body (fetch-canvas-data-file.py:25-38) with an I/O thread pool.
-            # Total parallelism = max_fetch_tasks x io_threads, none of it
-            # serialized through the driver. Per-file outcomes are rolled up
-            # EXECUTOR-SIDE by a chained narrow stage (same job — the
-            # side-effectful worker runs exactly once): each batch reduces
-            # to (action, count, bounded key sample), so the driver holds
-            # O(tasks x actions) rows no matter how many millions of files
-            # the manifest lists. The per-file Lambda-log analog survives as
-            # a capped sample (``log_sample_cap``).
-            n_tasks = max(1, self.max_fetch_tasks)
-            per_batch_cap = max(1, self.log_sample_cap // n_tasks)
+            # Fetch/delete fan-out ON THE EXECUTORS (the analog of the
+            # one-Lambda-per-file dispatch, sync-canvas-data-files.py:78-84):
+            # one task per slot (``_fan_out``), each running the guarded
+            # fetch body (fetch-canvas-data-file.py:25-38) on an I/O thread
+            # pool and rolling its outcomes up in the same Python pass, so the
+            # driver holds O(tasks x actions) rows at any manifest size; the
+            # per-file Lambda-log analog is a capped sample (log_sample_cap).
+            n_tasks, threads = self._fan_out(spark)
+            per_task_cap = max(1, self.log_sample_cap // n_tasks)
             if self.max_files_per_run is not None:
                 # bounded mode needs COMPLETE per-key outcomes to maintain
                 # the failed-keys ledger; total dispatched work is already
                 # <= max_files_per_run, so the rollup stays driver-bounded
-                per_batch_cap = max(per_batch_cap, int(self.max_files_per_run))
-            rolled = (
-                work.repartition(n_tasks)
-                .mapInPandas(
-                    _apply_worker(self.root, fetcher, self.io_threads),
-                    "key string, action string",
-                )
-                .mapInPandas(
-                    _rollup_worker(per_batch_cap),
-                    "action string, n long, sample array<string>",
-                )
-                .collect()
-            )
-            totals: dict[str, int] = {}
+                per_task_cap = max(per_task_cap, int(self.max_files_per_run))
+            rolled = work.repartition(n_tasks).mapInArrow(
+                _apply_worker(self.root, fetcher, threads, per_task_cap),
+                "action string, n long, sample array<string>",
+            ).collect()
             samples: list[tuple[str, str]] = []
             for r in rolled:
-                totals[r["action"]] = totals.get(r["action"], 0) + int(r["n"])
+                totals[r["action"]] = totals.get(r["action"], 0) + r["n"]
                 samples.extend((k, r["action"]) for k in r["sample"])
             shown = sorted(samples)[: self.log_sample_cap]
             for key, action in shown:
@@ -290,32 +297,20 @@ class SyncEngine:
         # the executor rollup (actions beginning "failed") — plan counts
         # stay the verdict totals (sync_metrics_summary parity), failures
         # report how much of the fetch plan did NOT land this run
-        n_failed = 0
-        n_applied = 0
-        if not self.dry_run:
-            n_failed = sum(
-                int(t) for a, t in totals.items() if a.startswith("failed")
-            )
-            n_applied = sum(int(t) for t in totals.values())
+        n_fetch, n_delete = int(metrics["fetch"] or 0), int(metrics["delete"] or 0)
+        bounded = not self.dry_run and self.max_files_per_run is not None
         summary = SyncSummary(
             total_files=int(metrics["total"]),
-            files_fetched=int(metrics["fetch"] or 0),
+            files_fetched=n_fetch,
             files_skipped=int(metrics["skip"] or 0),
-            files_removed=int(metrics["delete"] or 0),
-            files_failed=n_failed,
+            files_removed=n_delete,
+            files_failed=sum(t for a, t in totals.items() if a.startswith("failed")),
             files_remaining=(
-                0
-                if self.dry_run or self.max_files_per_run is None
-                else max(
-                    0,
-                    int(metrics["fetch"] or 0)
-                    + int(metrics["delete"] or 0)
-                    - n_applied,
-                )
+                max(0, n_fetch + n_delete - sum(totals.values())) if bounded else 0
             ),
             dry_run=self.dry_run,
         )
-        if not self.dry_run and self.max_files_per_run is not None:
+        if bounded:
             if summary.files_remaining == 0 and summary.files_failed == 0:
                 # Converged cleanly. In MIRROR mode the plan is a full-outer
                 # join enumerating every remote AND local key, so a ledger
@@ -480,9 +475,13 @@ def json_line_notifier(path: str) -> Callable[[SyncSummary], None]:
     return _notify
 
 
-def _apply_worker(root: str, fetcher: Callable[[str, str], None], io_threads: int):
+def _apply_worker(
+    root: str, fetcher: Callable[[str, str], None], io_threads: int, sample_cap: int
+):
     """Task body for the distributed apply: runs on executors via
-    mapInPandas. One (key, verdict, url) row in, one (key, action) row out.
+    mapInArrow. (key, verdict, url) rows in; one (action, n, sample) row
+    per action out, covering the whole task, with at most ``sample_cap``
+    sorted keys in each sample.
 
     The idempotence guard lives HERE, inside the task, exactly like the
     reference worker's existence check (fetch-canvas-data-file.py:25-31) —
@@ -519,45 +518,35 @@ def _apply_worker(root: str, fetcher: Callable[[str, str], None], io_threads: in
             return f"failed ({type(e).__name__})"
 
     def _worker(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            with ThreadPoolExecutor(max_workers=max(1, io_threads)) as pool:
-                actions = list(
-                    pool.map(_one, pdf["key"], pdf["verdict"], pdf["url"])
+        counts: dict[str, int] = {}
+        samples: dict[str, list[str]] = {}
+        with ThreadPoolExecutor(max_workers=max(1, io_threads)) as pool:
+            for batch in batches:
+                keys, verdicts, urls = (
+                    batch.column(c).to_pylist() for c in ("key", "verdict", "url")
                 )
-            yield pd.DataFrame({"key": pdf["key"], "action": actions})
-
-    return _worker
-
-
-def _rollup_worker(sample_cap: int):
-    """Executor-side status rollup chained after ``_apply_worker`` (narrow,
-    same stage — no extra job, no re-execution of fetch side effects): each
-    (key, action) batch reduces to one row per action carrying the count
-    and at most ``sample_cap`` sorted keys. Keeps the driver's status
-    traffic bounded at any manifest size."""
-
-    def _roll(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            grouped = pdf.groupby("action", sort=True)["key"]
-            yield pd.DataFrame(
+                for key, action in zip(keys, pool.map(_one, keys, verdicts, urls)):
+                    counts[action] = counts.get(action, 0) + 1
+                    samples.setdefault(action, []).append(key)
+                for action, sample in samples.items():
+                    samples[action] = sorted(sample)[:sample_cap]
+        if counts:
+            actions = sorted(counts)
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "action": grouped.count().index,
-                    "n": grouped.count().values,
-                    "sample": [
-                        sorted(keys)[:sample_cap] for _, keys in grouped
-                    ],
-                }
+                    "action": actions,
+                    "n": [counts[a] for a in actions],
+                    "sample": [samples[a] for a in actions],
+                },
+                schema=pa.schema(
+                    [("action", pa.string()), ("n", pa.int64()),
+                     ("sample", pa.list_(pa.string()))]
+                ),
             )
 
-    return _roll
+    return _worker
 
 
 def copy_fetcher(chunk_bytes: int = 8 * 1024 * 1024) -> Callable[[str, str], None]:

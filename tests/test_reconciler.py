@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from canvas_data_aws_spark.ingest.reconciler import (
     SyncEngine,
     copy_fetcher,
@@ -89,7 +91,7 @@ def test_idempotence_guard_skips_existing(spark, tmp_path):
     (fetch-canvas-data-file.py:25-31). Exercised directly on the executor
     worker function so the race (plan says fetch, file appears before the
     task runs) is reproducible."""
-    import pandas as pd
+    import pyarrow as pa
 
     from canvas_data_aws_spark.ingest.reconciler import _apply_worker
 
@@ -100,16 +102,16 @@ def test_idempotence_guard_skips_existing(spark, tmp_path):
     def clobber(url, dest):
         open(dest, "w").write("CLOBBERED")
 
-    worker = _apply_worker(root, clobber, io_threads=2)
-    batch = pd.DataFrame(
+    worker = _apply_worker(root, clobber, io_threads=2, sample_cap=10)
+    batch = pa.RecordBatch.from_pydict(
         {
             "key": ["raw_files/users/a.gz", "raw_files/users/new.gz"],
             "verdict": ["fetch", "fetch"],
             "url": ["file:///x", "file:///y"],
         }
     )
-    out = pd.concat(list(worker(iter([batch]))))
-    actions = dict(zip(out["key"], out["action"]))
+    out = pa.Table.from_batches(list(worker(iter([batch])))).to_pylist()
+    actions = {k: r["action"] for r in out for k in r["sample"]}
     assert actions["raw_files/users/a.gz"] == "skip (exists)"
     assert actions["raw_files/users/new.gz"] == "fetched"
     # guard prevented the fetcher from running on the existing file
@@ -126,6 +128,133 @@ def test_idempotence_guard_skips_existing(spark, tmp_path):
     )
     assert summary.files_skipped == 1 and summary.files_fetched == 0
     assert open(os.path.join(root, "raw_files/users/a.gz")).read() == original
+
+
+def test_worker_rollup_caps_sample_but_counts_all(tmp_path):
+    """One row per action per task: exact counts, at most ``sample_cap``
+    keys per action, the smallest keys first."""
+    from canvas_data_aws_spark.ingest.reconciler import _apply_worker
+
+    import pyarrow as pa
+
+    keys = [f"raw_files/t/f{i:02d}.gz" for i in range(30)]
+    worker = _apply_worker(str(tmp_path), lambda u, d: open(d, "w").close(), 4, 5)
+    batches = [
+        pa.RecordBatch.from_pydict(
+            {"key": keys[i : i + 10], "verdict": ["fetch"] * 10, "url": ["x"] * 10}
+        )
+        for i in range(0, 30, 10)
+    ]
+    (out,) = pa.Table.from_batches(list(worker(iter(batches)))).to_pylist()
+    assert out == {"action": "fetched", "n": 30, "sample": keys[:5]}
+    assert list(worker(iter([]))) == []  # an empty task emits nothing
+
+
+def test_plan_is_local_scans_without_python_stage(spark, tmp_path):
+    """The manifest and the listing are local tables: the reconcile join
+    reads a LocalTableScan on each side and launches no Python task."""
+    root = str(tmp_path)
+    _touch(root, "users/a.gz")
+    plan = SyncEngine(root=root).plan(spark, _remote("users/a.gz", "users/b.gz"))
+    qe = plan._jdf.queryExecution()
+    physical = qe.executedPlan().toString()
+    assert physical.count("LocalTableScan") == 2, physical
+    assert "ExistingRDD" not in physical
+    assert "applySchemaToPythonRDD" not in qe.toRdd().toDebugString()
+
+
+def test_fanout_runs_one_task_per_slot(spark, tmp_path):
+    """The fan-out stage runs min(max_fetch_tasks, defaultParallelism)
+    tasks, in mirror and additive mode: max_fetch_tasks is a cap, not a
+    task count. Fewer tasks than the cap get larger thread pools, so
+    max_fetch_tasks x io_threads fetches stay in flight."""
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    for cap in (1, 2, slots, 16, 64):
+        n_tasks, threads = SyncEngine(root="", max_fetch_tasks=cap, io_threads=8)._fan_out(
+            spark
+        )
+        assert n_tasks == min(cap, slots)
+        assert n_tasks * threads >= cap * 8 > n_tasks * (threads - 8)
+    src = tmp_path / "src"
+    os.makedirs(src)
+    for i in range(12):
+        (src / f"f{i}.gz").write_text(str(i))
+
+    def fanout_tasks(max_fetch_tasks, names, additive):
+        group = f"sync-fanout-{max_fetch_tasks}"
+        sc.setJobGroup(group, "fan-out task count")
+        try:
+            summary = SyncEngine(
+                root=str(tmp_path / "lake"), max_fetch_tasks=max_fetch_tasks
+            ).apply(
+                spark,
+                [
+                    {"table": "t", "filename": n, "url": f"file://{src}/{n}"}
+                    for n in names
+                ],
+                copy_fetcher(),
+                additive=additive,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert summary.files_fetched == len(names) and summary.files_failed == 0
+        tracker = sc.statusTracker()
+        last_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+        return tracker.getStageInfo(max(last_job.stageIds)).numTasks
+
+    names = [f"f{i}.gz" for i in range(12)]
+    assert fanout_tasks(64, names[:6], True) == min(64, sc.defaultParallelism)
+    assert fanout_tasks(2, names[6:], False) == 2  # mirror: also deletes names[:6]
+
+
+def test_manifest_row_without_url(spark, tmp_path):
+    """url is the one nullable manifest column: a row without one still
+    reconciles, skips when the file exists, and a fetch of it fails alone."""
+    root = str(tmp_path / "lake")
+    _touch(root, "users/a.gz")
+    src = tmp_path / "b.gz"
+    src.write_text("b")
+    rows = [
+        {"table": "users", "filename": "a.gz", "url": None},
+        {"table": "users", "filename": "b.gz", "url": f"file://{src}"},
+        {"table": "users", "filename": "c.gz"},
+    ]
+    remote = manifest_from_rows(spark, rows)
+    assert remote.schema["url"].nullable and not remote.schema["table"].nullable
+    plan = SyncEngine(root=root).plan(spark, rows)
+    got = {r["key"]: (r["verdict"], r["url"]) for r in plan.collect()}
+    assert got == {
+        "raw_files/users/a.gz": ("skip", None),
+        "raw_files/users/b.gz": ("fetch", f"file://{src}"),
+        "raw_files/users/c.gz": ("fetch", None),
+    }
+    engine = SyncEngine(root=root)
+    summary = engine.apply(spark, rows, copy_fetcher())
+    assert (summary.files_fetched, summary.files_skipped, summary.files_failed) == (2, 1, 1)
+    assert open(os.path.join(root, "raw_files/users/b.gz")).read() == "b"
+    assert not os.path.exists(os.path.join(root, "raw_files/users/c.gz"))
+    assert "failed (AttributeError): raw_files/users/c.gz" in engine.log
+    # the other columns stay required
+    with pytest.raises(Exception, match="non-nullable"):
+        manifest_from_rows(spark, [{"table": None, "filename": "d.gz"}])
+
+
+def test_empty_local_listing(spark, tmp_path):
+    """No lake yet: the listing is empty but keeps its schema, and every
+    remote file verdicts 'fetch'; an empty manifest against it plans
+    nothing."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    root = str(tmp_path / "missing")
+    local = local_listing(spark, root)
+    assert local.schema == StructType([StructField("key", StringType(), False)])
+    assert local.count() == 0
+    plan = reconcile(manifest_from_rows(spark, _remote("users/a.gz")), local)
+    assert [(r["key"], r["verdict"]) for r in plan.collect()] == [
+        ("raw_files/users/a.gz", "fetch")
+    ]
+    assert reconcile(manifest_from_rows(spark, []), local).count() == 0
 
 
 def test_apply_runs_on_executors(spark, tmp_path):

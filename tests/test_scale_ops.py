@@ -133,6 +133,21 @@ def test_compact_raw_tsv_round_trip(spark, tmp_path):
     assert rows == [(1, 1.5), (2, None), (3, 2.25)]
     assert any(f.endswith(".parquet") for f in os.listdir(out))
 
+    # partitioned: the partition columns come last, in partitionBy order, and
+    # keep their declared types (inference would read '07' back as int 7)
+    table["columns"] += [{"name": "grp", "type": "varchar"}, {"name": "n", "type": "bigint"}]
+    with gzip.open(os.path.join(raw_dir, "t-0.tsv.gz"), "wt") as f:
+        f.write("1\t1.5\t07\t7\n2\t\\N\t20\t7\n3\t2.25\t07\t8\n")
+    out = str(tmp_path / "curated" / "t_part")
+    curated = compact_raw_tsv(spark, raw_dir, table_struct(table), out, partition_by=["grp", "n"])
+    assert curated.schema.simpleString() == "struct<id:bigint,v:double,grp:string,n:bigint>"
+    assert sorted(map(tuple, curated.collect())) == [
+        (1, 1.5, "07", 7),
+        (2, None, "20", 7),
+        (3, 2.25, "07", 8),
+    ]
+    assert sorted(d for d in os.listdir(out) if d.startswith("grp=")) == ["grp=07", "grp=20"]
+
 def test_zorder_layout_narrows_file_spans_on_both_dims(spark, sf_dir, tmp_path):
     """The point of Z-order: per-file min/max footers must be narrow on
     EVERY clustered dimension, not just a leading sort key. Measured

@@ -70,7 +70,10 @@ def child(qname: str) -> None:
         t0 = time.time()
         fn(spark, DST).write.format("noop").mode("overwrite").save()
         best = min(best, time.time() - t0)
-    print(json.dumps({"query": qname, "cpus": os.environ["SPARK_GRAFT_CPUS"], "sec": round(best, 3)}))
+    print(json.dumps({
+        "query": qname, "cpus": os.environ["SPARK_GRAFT_CPUS"], "sec": round(best, 3),
+        "src": probe10x.SRC,
+    }))
 
 
 def main() -> None:
@@ -80,6 +83,7 @@ def main() -> None:
         return
     queries = args or DEFAULT_QUERIES
     rows = {}
+    src = None
     for q in queries:
         rows[q] = {}
         for cpus in ("32", "8"):
@@ -93,11 +97,13 @@ def main() -> None:
                 print(f"{q} cpus={cpus}: CHILD FAILED\n{r.stderr[-2000:]}", file=sys.stderr)
                 rows[q][cpus] = None
                 continue
-            rows[q][cpus] = json.loads(line[-1])["sec"]
+            # src is probe10x.SRC as the child saw it (importing it here starts Spark)
+            sample = json.loads(line[-1])
+            rows[q][cpus], src = sample["sec"], sample["src"]
             print(f"{q} cpus={cpus}: {rows[q][cpus]}s", flush=True)
     report = {
         "factor": FACTOR,
-        "src": "/root/testdata/sf0.1",
+        "src": src,
         "method": "fresh process per sample, warm-up + min-of-2, noop sink",
         "per_query": {
             q: {
